@@ -11,10 +11,7 @@ documented in OPTIMIZATION_r06.md: the previous timed action was
 `df.count()` followed by `df.limit(10).collect()`, which executed the
 whole physical plan TWICE per timed rep (the collect re-runs
 everything below the final operator) and additionally let count()
-prune columns the real query computes. Set SPARK_GRAFT_BENCH_LEGACY=1
-to reproduce the old count+collect timing for round-over-round
-comparison (plans/r06/bench_before.json is the legacy-method
-recording on the r6 host).
+prune columns the real query computes.
 """
 from __future__ import annotations
 
@@ -143,7 +140,6 @@ def main() -> None:
     # queries, not first-touch JIT
     QUERIES["q18_topk"](spark, sf_dir).collect()
 
-    legacy = os.environ.get("SPARK_GRAFT_BENCH_LEGACY") == "1"
     timings: dict[str, float] = {}
     for name in BENCH_QUERIES:
         fn = QUERIES[name]
@@ -168,11 +164,7 @@ def main() -> None:
             spark.catalog.clearCache()
             t0 = time.time()
             df = fn(spark, sf_dir)
-            if legacy:
-                n = df.count()
-                df.limit(10).collect()
-            else:
-                df.write.format("noop").mode("overwrite").save()
+            df.write.format("noop").mode("overwrite").save()
             elapsed = time.time() - t0
             best = elapsed if best is None else min(best, elapsed)
         spark.sparkContext.setJobDescription(None)

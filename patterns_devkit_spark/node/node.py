@@ -29,7 +29,7 @@ import time
 from typing import Any, Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -1624,10 +1624,10 @@ class Table:
             if existed:
                 prev = catalog.get_record_count(self.store_name, av.version_id)
                 if prev is None:
-                    # cache miss (e.g. version written via
-                    # write_dataframe_as_new_version): count the stored
-                    # data BEFORE appending, or record_count would
-                    # silently underreport as just the batch size
+                    # cache miss (a version written without a
+                    # recorded count): count the stored data BEFORE
+                    # appending, or record_count would silently
+                    # underreport as just the batch size
                     prev = av.as_dataframe().count()
             else:
                 prev = 0
@@ -2816,18 +2816,23 @@ class Table:
         vid = catalog.create_new_version(self.store_name)
         out = catalog.version_dir(self.store_name, vid)
         meta = catalog.table_meta(self.store_name) or {}
-        self._writer(self._sorted_for_write(df, meta), meta).mode("overwrite").parquet(out)
         from . import manifest as _mf
 
-        _mf.record(catalog, self.store_name, vid)
-        catalog.set_active_version(self.store_name, vid)
-        catalog.update_table_meta(
-            self.store_name,
-            schema_ddl=",".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in self._engine.spark.read.parquet(out).schema.fields
-            ),
-        )
-        catalog.gc_versions(self.store_name)
+        # the schema and row count come from the frame as written (the
+        # count rides on the write job), not from reading the files back
+        rows = Observation()
+        written = self._sorted_for_write(df, meta)
+        self._writer(written.observe(rows, F.count(F.lit(1)).alias("n")), meta).mode("overwrite").parquet(out)
+        n = rows.get["n"]
+        with catalog.commit_batch():
+            _mf.record(catalog, self.store_name, vid)
+            catalog.set_record_count(self.store_name, vid, n)
+            catalog.set_active_version(self.store_name, vid)
+            catalog.update_table_meta(
+                self.store_name,
+                schema_ddl=",".join(f"{f.name} {f.dataType.simpleString()}" for f in written.schema.fields),
+            )
+            catalog.gc_versions(self.store_name)
         if created:
             self.signal_create()
         else:

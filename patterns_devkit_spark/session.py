@@ -13,6 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the checkout root: Python workers import the package (and the worker
+# daemon below) from here whatever the driver's cwd and PYTHONPATH are
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "patterns-devkit-spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
@@ -33,5 +37,9 @@ def get_spark(app_name: str = "patterns-devkit-spark", shuffle_partitions: int |
         # fixture events.parquet stores TIMESTAMP(NANOS); Spark has no ns
         # timestamp type — read as long and convert (see queries.t)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # workers fork from a daemon that stops per-task re-reads of
+        # pyspark.zip and the Spark jar (patterns_devkit_spark/daemon.py)
+        .config("spark.python.daemon.module", "patterns_devkit_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", _ROOT)
     )
     return builder.getOrCreate()

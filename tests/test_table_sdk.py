@@ -352,3 +352,32 @@ def test_order_max_from_footer_stats(engine, spark, sf_dir):
         av = tb.get_active_version()
         engine.catalog.ensure_table("ev_hwm").get("order_hwms", {}).pop(av.version_id, None)
         assert tb.order_max() == true_max + 5
+
+
+def test_new_version_ddl_and_count_come_from_written_frame(engine, spark):
+    """write_dataframe_as_new_version records the schema of the frame it
+    wrote and the row count observed on the write: the DDL equals what
+    reading the files back gives, for every column kind."""
+    df = spark.sql(
+        """
+        SELECT CAST(id AS INT) AS i, id AS l, id / 3.0D AS d,
+               CAST(id * 1.25 AS DECIMAL(12, 2)) AS dec, CAST(id AS STRING) AS s,
+               DATE'2024-01-01' + CAST(id AS INT) AS dt,
+               TIMESTAMP'2024-01-01 10:00:00' AS ts,
+               TIMESTAMP_NTZ'2024-01-01 10:00:00' AS ntz,
+               array(CAST(id AS INT), 2) AS arr, map('k', id) AS m,
+               named_struct('a', CAST(id AS INT), 'b', 'x') AS st
+        FROM range(7)
+        """
+    )
+    with engine.node_context("w", outputs={"out": "ddl_t"}):
+        t = Table("out", "w")
+        v = t.write_dataframe_as_new_version(df)
+    catalog = engine.catalog
+    # recorded by the write itself, not by a later count job
+    assert catalog.get_record_count("ddl_t", v.version_id) == 7
+    read_back = ",".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in spark.read.parquet(v.storage).schema.fields
+    )
+    assert catalog.table_meta("ddl_t")["schema_ddl"] == read_back
+    assert "ntz timestamp_ntz" in read_back and "dec decimal(12,2)" in read_back

@@ -7,7 +7,9 @@
 #   3. write-path suites under PDS_LINK_MODE=reference — the
 #      object-storage simulation (no hardlinks; zero-copy must survive
 #      as pure manifest refs)
-#   4. driver-gate parity mimic at sf0.01
+#   4. write-path suites under PDS_CATALOG_BACKEND=objectstore — the
+#      lock-less conditional-put metastore
+#   5. driver-gate parity mimic at sf0.01
 # Usage: tools/verify_round.sh [--fast]   (--fast: write-path suites only
 # for the sqlite sweep, like CLAUDE.md's 2.5-min variant)
 set -euo pipefail
@@ -26,10 +28,10 @@ tests/test_deletion_vectors.py tests/test_time_travel.py tests/test_merge_on_rea
 tests/test_branches.py tests/test_mor_model.py tests/test_change_feed.py \
 tests/test_sql_merge.py"
 
-echo "== [1/4] full suite, default backend =="
+echo "== [1/5] full suite, default backend =="
 python -m pytest tests/ -q
 
-echo "== [2/4] sqlite-backend sweep =="
+echo "== [2/5] sqlite-backend sweep =="
 if [[ "${1:-}" == "--fast" ]]; then
   PDS_CATALOG_BACKEND=sqlite python -m pytest $WRITE_PATH_SUITES -q
 else
